@@ -37,14 +37,14 @@ PHRASES = ["machine_learning extra ignored", "quick_brown x"]
 COLLECTIONS = ["machine_learning", "brown_fox"]
 
 
-@pytest.fixture(scope="module")
-def job_outputs(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("vspace_job")
+def _write_job(root, extra_conf: str = "", docs=DOCS) -> JobConfig:
+    """Write the five input files and ``job.conf`` under ``root``;
+    ``extra_conf`` adds ``[job]`` lines."""
     corpus = root / "corpus.txt"
     # documents separated by the sentinel on its own line — the layout
     # the reference's Hadoop record-delimiter reader handles and the
     # line-split fast path cannot (fragments doc 3 at its newline)
-    corpus.write_text(f"\n{RECORD_DELIMITER}\n".join(DOCS))
+    corpus.write_text(f"\n{RECORD_DELIMITER}\n".join(docs))
     (root / "index.tsv").write_text(
         "\n".join(
             "\t".join(map(str, r + ("m1", "t", "a", "m2", "m3", "m4")))
@@ -68,8 +68,14 @@ def job_outputs(spark, tmp_path_factory):
             maxngrams = 2
             """
         )
+        + extra_conf
     )
-    config = JobConfig.from_ini(str(root / "job.conf"))
+    return JobConfig.from_ini(str(root / "job.conf"))
+
+
+@pytest.fixture(scope="module")
+def job_outputs(spark, tmp_path_factory):
+    config = _write_job(tmp_path_factory.mktemp("vspace_job"))
     metrics: dict[str, float] = {}
     outputs = run_job(spark, config, metrics_out=metrics)
     outputs["_metrics"] = metrics
@@ -168,3 +174,79 @@ def test_job_config_splits_honored(spark, tmp_path):
     )
     jc = JobConfig.from_ini(str(conf))
     assert jc.splits == 7
+
+
+def test_splits_scoped_to_the_job(spark, tmp_path, monkeypatch):
+    """``splits`` sets spark.sql.shuffle.partitions while the job runs
+    and the previous value comes back when it ends."""
+    from vspace_spark.io import sinks
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != "7"
+    during = []
+    write = sinks.write_parquet
+
+    def recording_write(df, path, **kwargs):
+        during.append(spark.conf.get(key))
+        return write(df, path, **kwargs)
+
+    monkeypatch.setattr(sinks, "write_parquet", recording_write)
+    run_job(spark, _write_job(tmp_path, "splits = 7\n"))
+    assert during and set(during) == {"7"}
+    assert spark.conf.get(key) == before
+
+
+def test_failed_job_releases_cached_frames(spark, tmp_path, monkeypatch):
+    """A sink that raises mid-job leaves none of the job's cached frames
+    (vocabulary, normalized corpus, per-document token counts) in the
+    cache."""
+    from pyspark import StorageLevel
+
+    from vspace_spark.io import sinks
+    from vspace_spark.operators import stats
+    from vspace_spark.pipelines import corpus_job
+
+    seen, levels_at_failure = [], []
+    write = sinks.write_parquet
+    build_vocabulary = corpus_job.build_vocabulary
+    tokenized_documents = stats.tokenized_documents
+
+    def failing_write(df, path, **kwargs):
+        if path.endswith("global_stats"):
+            levels_at_failure.extend(f.storageLevel for f in seen)
+            raise OSError("disk full")
+        return write(df, path, **kwargs)
+
+    def recording_vocabulary(*args, **kwargs):
+        seen.append(build_vocabulary(*args, **kwargs))
+        return seen[-1]
+
+    def recording_tokens(docs, *args, **kwargs):
+        seen.append(docs)
+        seen.append(tokenized_documents(docs, *args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(sinks, "write_parquet", failing_write)
+    monkeypatch.setattr(corpus_job, "build_vocabulary", recording_vocabulary)
+    monkeypatch.setattr(stats, "tokenized_documents", recording_tokens)
+    with pytest.raises(OSError, match="disk full"):
+        run_job(spark, _write_job(tmp_path))
+    none = StorageLevel(False, False, False, False)
+    assert len(levels_at_failure) == 3 and none not in levels_at_failure
+    assert [df.storageLevel for df in seen] == [none] * 3
+
+
+def test_doc_without_index_row_only_in_global_stats(spark, tmp_path):
+    """A document with no index row counts in global_stats (stats come
+    from the whole corpus) and never reaches source_stats (the
+    document_index ⋈ source join drops it)."""
+    outputs = run_job(spark, _write_job(tmp_path, docs=DOCS + ["orphan zebra"]))
+    global_df = {
+        r.token: r.document_frequency
+        for r in _read(spark, outputs, "global_stats").collect()
+    }
+    assert global_df["orphan"] == 1 and global_df["zebra"] == 1
+    source_tokens = {r.token for r in _read(spark, outputs, "source_stats").collect()}
+    assert not {"orphan", "zebra"} & source_tokens
+    assert "quick" in source_tokens

@@ -5,6 +5,8 @@ small-SF answer stays correct."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -60,6 +62,58 @@ def test_vocab_gate_is_broadcast_semi_join(spark, sf_dir):
     df = QUERIES["vocab_gated_stats"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan[:2000]
+
+
+def _final_tree(plan: str) -> str:
+    """The formatted plan's operator tree without AQE's "Initial Plan"
+    subtrees, which repeat every operator of a plan (or of a cached
+    relation's plan) that has already run."""
+    kept, skip_from = [], None
+    for line in plan.split("\n\n", 1)[0].splitlines():
+        col = len(line) - len(line.lstrip(" :|+-"))
+        if skip_from is not None and col >= skip_from:
+            continue
+        skip_from = None
+        if "== Initial Plan ==" in line:
+            skip_from = line.index("==")
+            continue
+        kept.append(line)
+    return "\n".join(kept)
+
+
+def _generate_nodes(plan: str) -> set[str]:
+    """Distinct Generate (explode) operator ids: a cached relation
+    repeats its nodes, under the same ids, once per scan of it."""
+    return set(re.findall(r"Generate \((\d+)\)", _final_tree(plan)))
+
+
+def test_vocab_gated_stats_explodes_once(spark, sf_dir):
+    """The gate is a single pass over the one cached token stream: one
+    explode, one broadcast LEFT SEMI join, and the stream is scanned
+    twice (vocabulary build + gate) rather than once per gate branch.
+    Checked before and after the query (and its cache) has run."""
+    df = QUERIES["vocab_gated_stats"](spark, sf_dir)
+    for ran in (False, True):
+        if ran:
+            df.count()
+        plan = formatted_plan(df)
+        tree = _final_tree(plan)
+        assert len(_generate_nodes(plan)) == 1, tree
+        assert "BroadcastHashJoin LeftSemi" in tree, tree
+        assert tree.count("InMemoryTableScan") == 2, tree
+
+
+def test_gated_tokenized_documents_explode_once(spark):
+    """tokenized_documents with a vocabulary explodes the corpus once:
+    unigrams and multi-grams share one Generate and one semi join."""
+    from vspace_spark.operators.stats import tokenized_documents
+
+    docs = spark.createDataFrame([(0, "a b c"), (1, "b c d")], "doc_id long, text string")
+    vocab = spark.createDataFrame([("b c",)], "token string")
+    plan = formatted_plan(tokenized_documents(docs, max_n=3, vocabulary=vocab))
+    assert len(_generate_nodes(plan)) == 1, plan[:3000]
+    assert plan.count("Join type: LeftSemi") == 1, plan[:3000]
+    assert "BroadcastHashJoin LeftSemi" in plan, plan[:3000]
 
 
 def test_price_band_join_is_broadcast_not_cartesian(spark, sf_dir):

@@ -3,6 +3,9 @@ statistics pipeline over hypothesis-generated corpora."""
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 import pytest
 
 from hypothesis import HealthCheck, given, settings
@@ -99,6 +102,81 @@ def test_per_source_vs_global_df(spark, corpus):
         .collect()
     }
     assert summed == global_stats
+
+
+def _oracle_doc_tokens(texts, max_n, vocab, split=str.split):
+    """Plain-Python vocabulary-gated per-document counts,
+    ``{(doc_id, token): (wc, tf)}``: every gram of every document, docid
+    grams dropped, a gram containing a space kept only if in ``vocab``
+    (reference DAWG gate, vspace/pipelines/base.py:385-389)."""
+    out = {}
+    for doc_id, text in enumerate(texts):
+        toks = split(text)
+        grams = Counter(
+            " ".join(toks[j : j + n])
+            for n in range(1, max_n + 1)
+            for j in range(len(toks) - n + 1)
+        )
+        for gram, tf in grams.items():
+            if re.fullmatch(r"nferdoccount_[0-9]+", gram):
+                continue
+            if " " in gram and gram not in vocab:
+                continue
+            out[(doc_id, gram)] = (len(toks), tf)
+    return out
+
+
+def _gated(spark, texts, vocab_rows, max_n, **kwargs):
+    vocab = spark.createDataFrame([(t,) for t in vocab_rows], "token string")
+    rows = tokenized_documents(
+        _docs_df(spark, texts), max_n=max_n, vocabulary=vocab, **kwargs
+    ).collect()
+    return {(r.doc_id, r.token): (r.wc, r.tf) for r in rows}
+
+
+def test_gate_custom_tokenizer_spaced_unigrams(spark):
+    """A tokenizer whose unigrams contain spaces: those unigrams are
+    gated like multi-grams (kept only when in vocabulary)."""
+    texts = ["new york,boston,new york", "boston,la paz,boston"]
+    vocab = ["new york", "boston new york", "la paz boston"]
+    got = _gated(
+        spark, texts, vocab, max_n=2, tokenizer=lambda c: F.split(c, ",")
+    )
+    want = _oracle_doc_tokens(texts, 2, set(vocab), split=lambda t: t.split(","))
+    assert got == want
+    assert (0, "new york") in got and (1, "la paz") not in got
+
+
+def test_gate_duplicate_vocabulary_rows_do_not_multiply(spark):
+    texts = ["the data spark data spark", "data spark join"]
+    vocab = ["data spark", "data spark", "data spark", "spark join"]
+    got = _gated(spark, texts, vocab, max_n=3)
+    assert got == _oracle_doc_tokens(texts, 3, set(vocab))
+    assert got[(0, "data spark")] == (5, 2)
+
+
+def test_gate_empty_vocabulary_keeps_only_unigrams(spark):
+    texts = ["the data spark", "nferdoccount_1 x x", ""]
+    got = _gated(spark, texts, [], max_n=3)
+    assert got == _oracle_doc_tokens(texts, 3, set())
+    assert got and all(" " not in token for _, token in got)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    corpus=CORPUS,
+    vocab=st.lists(st.lists(WORDS, min_size=1, max_size=3).map(" ".join), max_size=8),
+)
+def test_gate_matches_python_oracle(spark, corpus, vocab):
+    """Random corpora and vocabularies (unigram entries, duplicates and
+    docid grams included) gate exactly like the Python oracle."""
+    assert _gated(spark, corpus, vocab, max_n=3) == _oracle_doc_tokens(
+        corpus, 3, set(vocab)
+    )
 
 
 @settings(

@@ -90,8 +90,14 @@ def tokenized_documents(
         text = normalize_col(text_col)
     else:
         text = F.col(text_col)
-    tokens = (tokenizer or tokenize_col)(text)
+    # Project the token array once: wc and every zip_with rung of the
+    # n-gram ladder read this column instead of re-running the split
+    # regex (Catalyst keeps the projection because it is referenced
+    # more than once).
+    tokens = F.col("_tokens")
     ex = docs.select(
+        id_col, *extra_cols, (tokenizer or tokenize_col)(text).alias("_tokens")
+    ).select(
         id_col,
         *extra_cols,
         F.size(tokens).alias("wc"),
@@ -104,13 +110,40 @@ def tokenized_documents(
         # probed its broadcast DAWG during generation (base.py:385-389):
         # dropped multi-grams must never reach the shuffle. Gating after
         # the per-doc agg measured 4× slower end-to-end at 6-gram scale.
-        unigrams = ex.filter(~F.col("token").contains(" "))
-        multigrams = ex.filter(F.col("token").contains(" ")).join(
-            F.broadcast(vocabulary.select("token")), "token", "left_semi"
-        )
-        ex = unigrams.unionByName(multigrams)
+        # One gate over the single explode above: gating unigrams and
+        # multi-grams as separate branches would explode the corpus once
+        # per branch.
+        ex = vocabulary_gate(ex, vocabulary)
     return ex.groupBy(id_col, *extra_cols, "wc", "token").agg(
         F.count("*").alias("tf")
+    )
+
+
+def vocabulary_gate(grams: DataFrame, vocabulary: DataFrame) -> DataFrame:
+    """J3 — keep the rows of ``grams`` whose ``token`` is a unigram or a
+    vocabulary multi-gram (reference DAWG gate,
+    vspace/pipelines/base.py:385-389), as ONE broadcast LEFT SEMI join.
+
+    A token containing a space keys on itself, any other token keys on
+    ``""``; the broadcast side is the vocabulary's multi-word tokens
+    plus one ``""`` row. So unigrams always pass, multi-grams pass only
+    if in ``vocabulary``, duplicate vocabulary rows cannot multiply
+    counts, and an empty vocabulary keeps exactly the unigrams. "Unigram"
+    means "contains no space", so a custom tokenizer whose tokens hold
+    spaces has them gated like multi-grams.
+    """
+    keep = (
+        vocabulary.select(F.col("token").alias("_gate"))
+        .filter(F.col("_gate").contains(" "))
+        .unionByName(
+            vocabulary.sparkSession.range(1).select(F.lit("").alias("_gate"))
+        )
+    )
+    key = F.when(F.col("token").contains(" "), F.col("token")).otherwise("")
+    return (
+        grams.withColumn("_gate", key)
+        .join(F.broadcast(keep), "_gate", "left_semi")
+        .drop("_gate")
     )
 
 

@@ -7,6 +7,13 @@ vocabulary (phrases ∪ collections → distinct → id → CSV) → corpus
 driver-collected broadcast DAWG) → metadata joins (index ⋈ src2sub) →
 global + per-source term statistics → CSV sinks.
 
+Like the reference, the job tokenizes the corpus ONCE: one gated
+explode builds the cached per-document histogram (doc, wc, token, tf),
+and both stats tables aggregate it — globally, and per source after a
+join with the (document_index, source) pairs. The corpus text never
+crosses the source join, so the 2×-fanned-out corpus is never
+re-tokenized.
+
 Rebuild differences (all conscious, SURVEY.md §1.4/§4):
 - vocabulary gate = broadcast LEFT SEMI join (no driver collect, no
   64 GB maxResultSize);
@@ -23,13 +30,17 @@ from __future__ import annotations
 
 import configparser
 import os
+from contextlib import ExitStack
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vspace_spark.io import sinks, sources
-from vspace_spark.operators.stats import build_vocabulary, term_stats
+from vspace_spark.operators import stats
+# term_stats stays importable from this module: perfbench's traced pass
+# patches corpus_job.term_stats by name.
+from vspace_spark.operators.stats import build_vocabulary, term_stats  # noqa: F401
 
 
 @dataclass
@@ -101,91 +112,106 @@ def run_job(
     reference's separate ``count()`` passes. The modern replacement
     for C1-style job-group bookkeeping at 100 TB, where a stray
     count() is a full corpus scan.
+
+    The job leaves the session as it found it: ``splits`` overrides
+    ``spark.sql.shuffle.partitions`` only for the job's duration, and
+    the frames it caches (vocabulary, normalized corpus, per-document
+    token counts) are released even when a stage raises.
     """
-    if config.splits:
-        spark.conf.set("spark.sql.shuffle.partitions", str(config.splits))
+    with ExitStack() as cleanup:
+        if config.splits:
+            key = "spark.sql.shuffle.partitions"
+            cleanup.callback(spark.conf.set, key, spark.conf.get(key))
+            spark.conf.set(key, str(config.splits))
 
-    sc = spark.sparkContext
-    out: dict[str, str] = {}
+        def persist(df: DataFrame) -> DataFrame:
+            cleanup.callback(df.unpersist)
+            return df.persist()
 
-    def sink(df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
-        path = os.path.join(config.output_folder, name)
-        if config.output_format == "csv":
-            sinks.write_csv(df, path, partition_by=partition_by)
-        else:
-            sinks.write_parquet(df, path, partition_by=partition_by)
-        out[name] = path
+        sc = spark.sparkContext
+        out: dict[str, str] = {}
 
-    # --- vocabulary phase (reference: base.py:341-371) ---
-    sc.setJobGroup("vocabulary", "phrases ∪ collections → distinct → id")
-    phrases = sources.load_phrases(spark, config.phrases)
-    collections = sources.load_collections(spark, config.collections)
-    vocabulary = build_vocabulary(phrases, collections).persist()
-    sink(vocabulary, "vocabulary")
+        def sink(
+            df: DataFrame, name: str, partition_by: list[str] | None = None
+        ) -> None:
+            path = os.path.join(config.output_folder, name)
+            if config.output_format == "csv":
+                sinks.write_csv(df, path, partition_by=partition_by)
+            else:
+                sinks.write_parquet(df, path, partition_by=partition_by)
+            out[name] = path
 
-    # --- corpus phase (reference: base.py:373-397) ---
-    sc.setJobGroup("corpus", "sentinel-split corpus → normalize")
-    corpus = sources.load_raw_corpus(spark, config.corpus)
-    from pyspark.sql import Observation
+        # --- vocabulary phase (reference: base.py:341-371) ---
+        sc.setJobGroup("vocabulary", "phrases ∪ collections → distinct → id")
+        phrases = sources.load_phrases(spark, config.phrases)
+        collections = sources.load_collections(spark, config.collections)
+        vocabulary = persist(build_vocabulary(phrases, collections))
+        sink(vocabulary, "vocabulary")
 
-    from vspace_spark.functions.text import normalize_col
+        # --- corpus phase (reference: base.py:373-397) ---
+        sc.setJobGroup("corpus", "sentinel-split corpus → normalize")
+        corpus = sources.load_raw_corpus(spark, config.corpus)
+        from pyspark.sql import Observation
 
-    corpus_obs = Observation("corpus")
-    normalized = (
-        corpus.select(
-            "document_index", normalize_col("text").alias("text")
+        from vspace_spark.functions.text import normalize_col
+
+        corpus_obs = Observation("corpus")
+        normalized = persist(
+            corpus.select(
+                "document_index", normalize_col("text").alias("text")
+            ).observe(
+                corpus_obs,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum(F.length("text")).alias("normalized_chars"),
+            )
         )
-        .observe(
-            corpus_obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.length("text")).alias("normalized_chars"),
+        sink(
+            normalized.select(
+                F.concat_ws("\t", "document_index", "text").alias("value")
+            ),
+            "normalized_corpus",
         )
-        .persist()
-    )
-    sink(
-        normalized.select(
-            F.concat_ws("\t", "document_index", "text").alias("value")
-        ),
-        "normalized_corpus",
-    )
 
-    # --- metadata phase (reference: base.py:399-416) ---
-    sc.setJobGroup("metadata", "index ⋈ src2sub")
-    index = sources.load_index(spark, config.index2doc)
-    src2sub = sources.load_sources(spark, config.src2sub)
+        # --- metadata phase (reference: base.py:399-416) ---
+        sc.setJobGroup("metadata", "index ⋈ src2sub")
+        index = sources.load_index(spark, config.index2doc)
+        src2sub = sources.load_sources(spark, config.src2sub)
 
-    # --- stats phase (reference: base.py:418-437) ---
-    sc.setJobGroup("stats", "global + per-source term statistics")
-    stats_obs = Observation("global_stats")
-    global_stats = term_stats(
-        normalized,
-        text_col="text",
-        id_col="document_index",
-        min_n=1,
-        max_n=config.maxngrams,
-        vocabulary=vocabulary,
-    ).observe(
-        stats_obs,
-        F.count(F.lit(1)).alias("n_terms"),
-        F.sum("term_frequency").alias("total_term_occurrences"),
-    )
-    sink(global_stats, "global_stats")
+        # --- stats phase (reference: base.py:418-437) ---
+        # One tokenize pass, two aggregations: the gated per-document
+        # histogram (doc, wc, token, tf) is built once and cached; global
+        # stats aggregate it directly, per-source stats aggregate it after
+        # a join with the (document_index, source) pairs. Each
+        # (doc, source) row carries its document's tf and wc, so the
+        # corpus is never tokenized per source.
+        sc.setJobGroup("stats", "global + per-source term statistics")
+        doc_tokens = persist(
+            stats.tokenized_documents(
+                normalized,
+                text_col="text",
+                id_col="document_index",
+                min_n=1,
+                max_n=config.maxngrams,
+                vocabulary=vocabulary,
+            )
+        )
+        stats_obs = Observation("global_stats")
+        global_stats = stats.compute_stats(doc_tokens).observe(
+            stats_obs,
+            F.count(F.lit(1)).alias("n_terms"),
+            F.sum("term_frequency").alias("total_term_occurrences"),
+        )
+        sink(global_stats, "global_stats")
 
-    with_source = combine_corpus_with_sources(normalized, index, src2sub)
-    source_stats = term_stats(
-        with_source,
-        text_col="text",
-        id_col="document_index",
-        group_cols=["source"],
-        min_n=1,
-        max_n=config.maxngrams,
-        vocabulary=vocabulary,
-    )
-    sink(source_stats, "source_stats", partition_by=["source"])
+        doc_source = combine_corpus_with_sources(
+            normalized.select("document_index"), index, src2sub
+        )
+        source_stats = stats.compute_stats(
+            doc_tokens.join(doc_source, "document_index"), ["source"]
+        )
+        sink(source_stats, "source_stats", partition_by=["source"])
 
-    vocabulary.unpersist()
-    normalized.unpersist()
-    if metrics_out is not None:
-        metrics_out.update(corpus_obs.get)
-        metrics_out.update(stats_obs.get)
-    return out
+        if metrics_out is not None:
+            metrics_out.update(corpus_obs.get)
+            metrics_out.update(stats_obs.get)
+        return out

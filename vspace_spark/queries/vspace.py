@@ -19,6 +19,7 @@ from vspace_spark.operators.stats import (
     doc_term_frequencies,
     term_stats,
     tokenized_documents,
+    vocabulary_gate,
 )
 from vspace_spark.queries import query
 
@@ -188,8 +189,8 @@ def vocab_gated_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # consumed three times (vocab build + both gate branches); level
-    # by the shared policy — DISK_ONLY once the corpus is big enough
+    # consumed twice (vocab build + the gate); level by the shared
+    # policy — DISK_ONLY once the corpus is big enough
     # that a heap-resident block would couple to aged-JVM GC state.
     # The persisted relation is the EXPLODED unigram+bigram stream —
     # several times the document bytes — so the estimate carries the
@@ -207,12 +208,7 @@ def vocab_gated_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") >= 20)
         .select("token")
     )
-    gated = toks.filter(~F.col("token").contains(" ")).unionByName(
-        toks.filter(F.col("token").contains(" ")).join(
-            F.broadcast(vocab), "token", "left_semi"
-        )
-    )
-    return compute_stats(gated)
+    return compute_stats(vocabulary_gate(toks, vocab))
 
 
 @query(

@@ -74,11 +74,12 @@ def streaming_term_stats(
     docs = docs.repartition(
         docs.sparkSession.sparkContext.defaultParallelism
     )
-    tokens = tokenize_col("text")
-    grams = everygrams_col(tokens, min_n, max_n)
-    ex = docs.select(
+    # tokenize once: wc and every n-gram rung read the projected column
+    # (operators/stats.py:tokenized_documents does the same)
+    tokens = F.col("_tokens")
+    ex = docs.select(tokenize_col("text").alias("_tokens")).select(
         F.size(tokens).alias("wc"),
-        F.explode(histogram(grams)).alias("h"),
+        F.explode(histogram(everygrams_col(tokens, min_n, max_n))).alias("h"),
     )
     return ex.groupBy(F.col("h.token").alias("token")).agg(
         F.count("*").alias("document_frequency"),
