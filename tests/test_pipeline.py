@@ -143,9 +143,17 @@ def test_source_stats_fanout_and_drop(job_outputs):
 
 
 def test_normalized_corpus_written(job_outputs):
+    """One row per fixture document: its index, a tab, and its text
+    lower-cased to space-joined word runs."""
+    import re
+
     spark, outputs = job_outputs
-    lines = spark.read.text(outputs["normalized_corpus"]).count()
-    assert lines == len(DOCS)
+    rows = _read(spark, outputs, "normalized_corpus").collect()
+    want = [
+        f"{i}\t" + " ".join(re.findall(r"[a-zA-Z0-9_]+", doc.lower()))
+        for i, doc in enumerate(DOCS)
+    ]
+    assert sorted(r.value for r in rows) == sorted(want)
 
 
 def test_lenient_decode_strips_control_chars(spark, tmp_path):
@@ -235,6 +243,44 @@ def test_failed_job_releases_cached_frames(spark, tmp_path, monkeypatch):
     none = StorageLevel(False, False, False, False)
     assert len(levels_at_failure) == 3 and none not in levels_at_failure
     assert [df.storageLevel for df in seen] == [none] * 3
+
+
+@pytest.mark.parametrize("fail", [False, True], ids=["success", "raises"])
+def test_job_group_restored(spark, tmp_path, monkeypatch, fail):
+    """The caller's job group, description and interrupt flag are back
+    on its thread when run_job returns or raises."""
+    from vspace_spark.io import sinks
+
+    sc = spark.sparkContext
+    keys = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+    sc.setJobGroup("caller", "caller's own work", interruptOnCancel=True)
+    before = {k: sc.getLocalProperty(k) for k in keys}
+    groups = []
+    write = sinks.write_parquet
+
+    def recording_write(df, path, **kwargs):
+        groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+        if fail and path.endswith("global_stats"):
+            raise OSError("disk full")
+        return write(df, path, **kwargs)
+
+    monkeypatch.setattr(sinks, "write_parquet", recording_write)
+    try:
+        if fail:
+            with pytest.raises(OSError, match="disk full"):
+                run_job(spark, _write_job(tmp_path))
+        else:
+            run_job(spark, _write_job(tmp_path))
+        assert "stats" in groups and "caller" not in groups
+        assert {k: sc.getLocalProperty(k) for k in keys} == before
+        assert before["spark.jobGroup.id"] == "caller"
+    finally:
+        for k in keys:
+            sc.setLocalProperty(k, None)
 
 
 def test_doc_without_index_row_only_in_global_stats(spark, tmp_path):

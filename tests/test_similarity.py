@@ -329,3 +329,154 @@ def test_refine_codebook_improves_centers_and_keeps_contract(spark):
         inertia(fine0),
         inertia(fine1),
     )
+
+
+def _same_double(a, b):
+    """Bit-for-bit double equality (so 0.0 vs -0.0 differ); any two
+    NaNs match, since NaN payloads are not part of the contract."""
+    import math
+    import struct
+
+    if math.isnan(a) or math.isnan(b):
+        return math.isnan(a) and math.isnan(b)
+    return struct.pack("<d", a) == struct.pack("<d", b)
+
+
+# -0.0, the smallest subnormal, values near the double range's edge,
+# and 17-significant-digit values whose repr needs every digit
+_EDGE_VALUES = [
+    -0.0,
+    5e-324,
+    -5e-324,
+    1e308,
+    -1.7976931348623157e308,
+    0.1,
+    1 / 3,
+    2.2250738585072014e-308,
+    123456789.12345678,
+    -9.8765432109876543e-7,
+]
+
+
+def test_double_matrix_round_trips_every_double(spark):
+    """The one-literal matrix carries each double bit for bit; the
+    non-finite values round-trip too (NaN, +Inf, -Inf)."""
+    from vspace_spark.functions.vectors import double_matrix
+
+    rows = [_EDGE_VALUES, [float("nan"), float("inf"), float("-inf")], []]
+    got = spark.range(1).select(double_matrix(rows).alias("m")).first().m
+    assert [len(r) for r in got] == [len(r) for r in rows]
+    for want_row, got_row in zip(rows, got):
+        for want, have in zip(want_row, got_row):
+            assert _same_double(want, have), (want, have)
+
+
+def test_cell_dist_structs_matches_python_left_fold(spark):
+    """Every (dist, cell) equals a plain-Python left fold from 0.0 over
+    (a - b)² in element order, exact to the bit, on edge-case doubles
+    and on non-finite centers."""
+    from vspace_spark.operators.similarity import _cell_dist_structs
+
+    e = _EDGE_VALUES
+    vectors = [
+        e[:4],
+        e[4:8],
+        [e[8], e[9], -e[3], e[1]],
+        [0.0, -0.0, 0.0, -0.0],
+        [1e-300, -1e-300, 3.0000000000000004, 0.30000000000000004],
+    ]
+    centers = [
+        e[6:10],
+        [-0.0, 0.0, 5e-324, -1e308],
+        [0.1, 0.2, 0.30000000000000004, 1.0000000000000002],
+        [float("inf"), 0.0, 0.0, 0.0],
+        [float("nan"), 1.0, 2.0, 3.0],
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(vectors)), "vec_id long, embedding array<double>"
+    )
+    got = {
+        r.vec_id: r.d
+        for r in df.select(
+            "vec_id", _cell_dist_structs(F.col("embedding"), centers).alias("d")
+        ).collect()
+    }
+    for vid, vec in enumerate(vectors):
+        want = []
+        for cell, c in enumerate(centers):
+            acc = 0.0
+            for a, b in zip(vec, c):
+                acc = acc + (a - b) * (a - b)
+            want.append((acc, cell))
+        have = [(s.dist, s.cell) for s in got[vid]]
+        assert [c for _, c in have] == [c for _, c in want]
+        for (wd, _), (hd, _) in zip(want, have):
+            assert _same_double(wd, hd), (vid, wd, hd)
+
+
+def test_lsh_signature_matches_python_sign_bits(spark):
+    """Bucket id = Σ 2^j over the planes whose left-fold dot product
+    with the vector is > 0."""
+    import numpy as np
+
+    from vspace_spark.operators.similarity import (
+        lsh_signature,
+        portable_hyperplanes,
+    )
+
+    rng = np.random.default_rng(5)
+    vecs = [[float(x) for x in rng.normal(0, 1, 8)] for _ in range(30)]
+    vecs.append([0.0] * 8)  # every dot is 0: no bit set
+    planes = portable_hyperplanes(8, 12)
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    got = {
+        r.vec_id: r.b
+        for r in df.select(
+            "vec_id", lsh_signature(F.col("embedding"), planes).alias("b")
+        ).collect()
+    }
+    for vid, v in enumerate(vecs):
+        want = 0
+        for j, p in enumerate(planes):
+            d = 0.0
+            for a, b in zip(v, p):
+                d = d + a * b
+            if d > 0:
+                want += 2**j
+        assert got[vid] == want, (vid, got[vid], want)
+
+
+def test_ivf_topk_plan_does_not_grow_with_centers(spark):
+    """The centers enter ivf_topk's plan as one constant per side: the
+    optimized plan has no JSON parse left, and the analyzed plan is the
+    same text for 4 and 256 centers once the matrix literal and the
+    expression ids are masked — a per-center expression tree would
+    grow with K."""
+    import re
+
+    from vspace_spark.operators.similarity import (
+        ivf_topk,
+        portable_hyperplanes,
+    )
+
+    rows = [(i, portable_hyperplanes(8, 1, salt=f"v{i}")[0]) for i in range(20)]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def plans(n_centers):
+        out = ivf_topk(
+            vecs, vecs, k=3, centers=portable_hyperplanes(8, n_centers, salt="c")
+        )
+        qe = out._jdf.queryExecution()
+        return qe.analyzed().toString(), qe.optimizedPlan().toString()
+
+    masked = []
+    for n_centers in (4, 256):
+        analyzed, optimized = plans(n_centers)
+        assert "from_json" not in optimized.lower()
+        assert "jsontostructs" not in optimized.lower()
+        text, n_matrices = re.subn(r"\[\[.*?\]\]", "<matrix>", analyzed)
+        assert n_matrices == 2  # corpus side and query side
+        masked.append(re.sub(r"\d+", "#", text))
+    assert masked[0] == masked[1]

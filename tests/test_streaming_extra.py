@@ -605,15 +605,13 @@ class TestIncrementalEmbedding:
         assert {(r.a, r.b, r.cos) for r in again.collect()} == want
 
     def test_incremental_fold_planes_as_data(self, spark, tmp_path):
-        """The fold lane ships its hyperplanes as DATA (one broadcast
-        row, planes picked with element_at) instead of 2048-node
-        literal trees (r13: Catalyst re-analysis of the literal tree
-        per micro-batch was the dominant per-batch driver cost). The
-        pin: every POSTING the replay persisted — the actual bucket
-        bits the data-path fold computed — must equal the literal-
-        planes ``lsh_signature`` value exactly; element_at yields the
-        same IEEE doubles the literals held and dot()'s sequential
-        fold is the same expression, so any drift is a bug."""
+        """The fold lane's hyperplanes ride as one constant-folded
+        matrix literal, not as a per-plane literal tree that Catalyst
+        re-analyzes per micro-batch. The pin: every POSTING the replay
+        persisted — the actual bucket bits the streaming fold computed
+        — must equal the batch ``lsh_signature`` value exactly; the
+        matrix holds the same IEEE doubles and dot()'s sequential fold
+        is the same expression, so any drift is a bug."""
         import numpy as np
 
         from vspace_spark.operators.similarity import (

@@ -10,6 +10,7 @@ from vspace_spark.functions.text import (  # noqa: F401
 from vspace_spark.functions.vectors import (  # noqa: F401
     cosine_similarity,
     dot,
+    double_matrix,
     l2_norm,
     l2_normalize,
 )

@@ -7,8 +7,26 @@ scale linearly with executor count.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def double_matrix(rows) -> Column:
+    """A driver-side list of float rows (centers, hyperplanes) as ONE
+    ``array<array<double>>`` constant.
+
+    The rows travel as a single JSON string literal that Catalyst
+    constant-folds, so the optimized plan holds one Literal and no
+    ``from_json``. Building it is one py4j call whatever K×D is; the
+    per-element ``F.lit`` tree it replaces cost one call per value
+    plus Catalyst analysis of K×D nodes. ``json.dumps`` writes the
+    shortest repr that round-trips and the JVM parses it correctly
+    rounded, so every double (−0.0, subnormals, ±1e308, NaN, ±Inf)
+    arrives bit-identical."""
+    text = json.dumps([[float(x) for x in row] for row in rows])
+    return F.from_json(F.lit(text), "array<array<double>>")
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -18,7 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from vspace_spark.functions.vectors import cosine_similarity, dot
+from vspace_spark.functions.vectors import (
+    cosine_similarity,
+    dot,
+    double_matrix,
+)
 
 
 def brute_force_topk(
@@ -121,12 +125,22 @@ def portable_hyperplanes(
 
 
 def lsh_signature(vec: F.Column, planes: list[list[float]]) -> F.Column:
-    """Sign-of-dot-product signature as a bigint bucket id (≤ 63 bits)."""
-    sig = F.lit(0).cast("bigint")
-    for j, plane in enumerate(planes):
-        d = dot(vec, F.array(*[F.lit(v) for v in plane]))
-        sig = sig + F.when(d > 0, F.lit(2**j).cast("bigint")).otherwise(F.lit(0))
-    return sig
+    """Sign-of-dot-product signature as a bigint bucket id (≤ 63 bits):
+    bit ``j`` is set when ``dot(vec, planes[j]) > 0``. The planes are
+    one :func:`double_matrix` constant, so the expression is the same
+    size for any number of planes; the integer sum is exact, so the
+    bucket id does not depend on the order the bits are added in."""
+    return F.aggregate(
+        F.transform(
+            double_matrix(planes),
+            lambda p, j: F.when(
+                dot(vec, p) > 0,
+                F.call_function("shiftleft", F.lit(1).cast("bigint"), j),
+            ).otherwise(F.lit(0).cast("bigint")),
+        ),
+        F.lit(0).cast("bigint"),
+        lambda acc, b: acc + b,
+    )
 
 
 def _cell_dist_structs(
@@ -137,24 +151,25 @@ def _cell_dist_structs(
     deterministic argmin (lowest id on exact-double ties), the same
     order an oracle's ``ORDER BY dist, id`` produces. The fold is a
     left-to-right ``aggregate`` from 0.0, bit-identical to DuckDB's
-    ``list_sum(list_transform(...))`` (NOTES.md float discipline)."""
-    return F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        F.array(*[F.lit(float(x)) for x in c]),
-                        lambda a, b: (a.cast("double") - b)
-                        * (a.cast("double") - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ).alias("dist"),
-                F.lit(i).alias(id_name),
-            )
-            for i, c in enumerate(centers)
-        ]
+    ``list_sum(list_transform(...))`` (NOTES.md float discipline).
+    The centers are one :func:`double_matrix` constant walked by a
+    single ``transform``, so building and analyzing the expression
+    costs the same at K=4 as at K=2048."""
+    return F.transform(
+        double_matrix(centers),
+        lambda c, i: F.struct(
+            F.aggregate(
+                F.zip_with(
+                    vec,
+                    c,
+                    lambda a, b: (a.cast("double") - b)
+                    * (a.cast("double") - b),
+                ),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            ).alias("dist"),
+            i.alias(id_name),
+        ),
     )
 
 
@@ -245,10 +260,10 @@ def _probe_cells_arrow(
 ) -> DataFrame:
     """Top-``n_probe`` nearest cells per query via one numpy matmul —
     yields ``[query_id, _qv, cell]`` (one row per probed cell). The
-    fold twin (``slice(array_sort(cell_dists))``) builds a K×D literal
-    expression tree that Catalyst must analyze per plan — measured
-    minutes of pure PLAN COMPILE at K=2048 (PERF.md round 9), which is
-    why the arrow engine routes the query side through numpy too.
+    fold twin (``slice(array_sort(cell_dists))``) runs an interpreted
+    fold over all K centers per query row; the arrow engine routes the
+    query side through the same numpy matmul as the corpus side
+    (:func:`_assign_cells_arrow`), so one engine choice covers both.
     Ties break (dist, cell) ascending like the fold path's struct
     sort."""
     from collections.abc import Iterator
@@ -470,9 +485,10 @@ def ivf_topk(
     ``assign_engine``: ``"fold"`` (default) assigns the corpus with
     the deterministic (dist, cell) struct argmin — an interpreted
     per-row fold over ALL centers, fine at small K and exactly
-    SQL-mirrorable. ``"arrow"`` assigns with one numpy matmul per
-    Arrow batch (requires an integral ``id_col``); with a trained
-    codebook it routes two-level through the coarse tier —
+    SQL-mirrorable; its centers are one constant, so building the
+    plan costs the same at any K. ``"arrow"`` assigns with one numpy
+    matmul per Arrow batch (requires an integral ``id_col``); with a
+    trained codebook it routes two-level through the coarse tier —
     N·(Kc + K/Kc)·D flops instead of N·K·D — which is what makes
     K ≥ 2048 codebooks practical (the flat interpreted fold was the
     measured ANN bottleneck, PERF.md round 3).
@@ -544,10 +560,8 @@ def ivf_topk(
         raise ValueError(f"unknown assign_engine: {assign_engine}")
 
     if assign_engine == "arrow":
-        # the fold probe below builds a K×D LITERAL expression tree —
-        # at K=2048/D=64 that is ~131k literal nodes and Catalyst
-        # analysis alone takes minutes (PERF.md round 9); the arrow
-        # engine routes the query side through the same numpy matmul
+        # the query side goes through the same numpy matmul as the
+        # corpus side, so one engine choice covers both
         q = _probe_cells_arrow(queries, centers, id_col, vec_col, n_probe)
     else:
         q = queries.select(

@@ -114,9 +114,10 @@ def run_job(
     count() is a full corpus scan.
 
     The job leaves the session as it found it: ``splits`` overrides
-    ``spark.sql.shuffle.partitions`` only for the job's duration, and
-    the frames it caches (vocabulary, normalized corpus, per-document
-    token counts) are released even when a stage raises.
+    ``spark.sql.shuffle.partitions`` only for the job's duration, the
+    caller's job group is restored, and the frames it caches
+    (vocabulary, normalized corpus, per-document token counts) are
+    released, even when a stage raises.
     """
     with ExitStack() as cleanup:
         if config.splits:
@@ -128,7 +129,15 @@ def run_job(
             cleanup.callback(df.unpersist)
             return df.persist()
 
+        # each phase runs under its own job group; the caller's group,
+        # description and interrupt flag come back when the job ends
         sc = spark.sparkContext
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            cleanup.callback(sc.setLocalProperty, key, sc.getLocalProperty(key))
         out: dict[str, str] = {}
 
         def sink(

@@ -285,11 +285,10 @@ def agree_dedup_semantic_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thrown away): the gate's answer is count(diff ANTI-JOIN amb) —
     # when diff is EMPTY (the lanes agree, the designed steady state)
     # that count is 0 for ANY ambiguity set, so the ε-scans below —
-    # TWO further full-corpus K-center assignment passes whose
-    # K×dim-literal codebook trees also cost seconds of driver-side
-    # Catalyst analysis — are dead work. They run only when a real
-    # disagreement exists and the gate must decide whether it is an
-    # ε-tie. Result identical by construction: count(∅ ⟕̸ X) = 0 =
+    # TWO further full-corpus K-center assignment passes, each an
+    # interpreted K-center fold per row — are dead work. They run only
+    # when a real disagreement exists and the gate must decide whether
+    # it is an ε-tie. Result identical by construction: count(∅ ⟕̸ X) = 0 =
     # count(∅). (Measured in OPTIMIZATION_r13.md.)
     if diff.isEmpty():
         return diff.agg(F.count(F.lit(1)).alias("disagreements"))
@@ -442,7 +441,7 @@ def agree_incr_embedding_arrow(
     legitimately flip. That exclusion set is EMPTY on today's
     fixtures (exact bag equality in practice); any differing pair
     between clear-margin vectors still counts."""
-    from vspace_spark.functions.vectors import dot
+    from vspace_spark.functions.vectors import dot, double_matrix
     from vspace_spark.io.sinks import keyed_tmp_dir
     from vspace_spark.streaming.incremental import (
         incremental_embedding_dedup,
@@ -488,8 +487,7 @@ def agree_incr_embedding_arrow(
     # endpoints) — with an EMPTY diff (the designed steady state; both
     # lanes are eager localCheckpoints, so this probe is two cheap
     # cached exceptAlls) the anti-joins are empty for ANY exclusion
-    # set, making the 32-plane min-|dot| full-corpus scan (a
-    # 32×dim-literal tree: seconds of Catalyst analysis + an
+    # set, making the 32-plane min-|dot| full-corpus scan (an
     # interpreted 32-dot fold per row) dead work. It runs only when a
     # real pair-set difference needs ε-adjudication. Identical result
     # by construction: count(∅ ⟕̸ X) = 0 = count(∅).
@@ -500,16 +498,11 @@ def agree_incr_embedding_arrow(
     dim = emb.select(F.size("embedding")).first()[0]
     # bounded-collect above: one scalar
     planes = portable_hyperplanes(dim, 32)
-    min_absdot = F.least(
-        *[
-            F.abs(
-                dot(
-                    F.col("embedding"),
-                    F.array(*[F.lit(float(x)) for x in p]),
-                )
-            )
-            for p in planes
-        ]
+    min_absdot = F.array_min(
+        F.transform(
+            double_matrix(planes),
+            lambda p: F.abs(dot(F.col("embedding"), p)),
+        )
     )
     amb = emb.filter(min_absdot <= F.lit(_EPS))
     material = diff.join(

@@ -958,9 +958,12 @@ def incremental_embedding_dedup(
             f"bits_per_table ({bits_per_table}) exceeds bits ({bits}): "
             "n_tables would be 0 and every pair would be silently missed"
         )
-    from vspace_spark.functions.vectors import cosine_similarity, dot
+    from vspace_spark.functions.vectors import cosine_similarity
     from vspace_spark.operators.scale import footer_row_count
-    from vspace_spark.operators.similarity import portable_hyperplanes
+    from vspace_spark.operators.similarity import (
+        lsh_signature,
+        portable_hyperplanes,
+    )
 
     if work_dir is None:
         work_dir = os.path.join(
@@ -999,56 +1002,35 @@ def incremental_embedding_dedup(
         )
     planes = portable_hyperplanes(dim, bits)
 
-    # The planes ride as DATA (a one-row broadcast frame cross-joined
-    # in, planes picked with element_at), not as per-plane literal
-    # arrays: bucketed_fold runs once per MICRO-BATCH, and Catalyst
-    # analysis of the 32×64-literal tree cost ~3 s of driver time per
-    # batch — the dominant share of the replay's per-batch fixed cost
-    # (r13 event-log decomposition: job exec 14.5 s vs 21.6 s of
-    # driver gaps). The float path is unchanged: element_at yields
-    # the same doubles the literals held, and dot()'s sequential
-    # aggregate fold is the same expression, so every sign bit is
-    # bit-identical (pinned by test_incremental_fold_planes_as_data
-    # and the unchanged oracle parity).
-    planes_rows = [[float(x) for x in p] for p in planes]
-
-    # The bucketing COLUMN EXPRESSION is built ONCE per operator call,
-    # not once per MICRO-BATCH (guide §7.3's loop-generated-trees rule
-    # applied to construction, not just analysis — r13): Column
-    # objects are immutable, session-independent parse trees, but each
-    # dot() converts two Python lambdas (zip_with + aggregate) through
-    # py4j, and rebuilding the 32-dot tree measured 1.6–2.7 s of pure
-    # DRIVER time per batch — the largest single share of the replay's
-    # per-batch fixed cost (probe in OPTIMIZATION_r13.md). Only the
-    # tiny one-row planes frame is (necessarily) created per batch —
-    # it must belong to the micro-batch's session.
-    # Built only on the fold lane (ADVICE r13): the arrow lane never
-    # calls bucketed_fold, and constructing the 32-dot tree here made
-    # it pay the very 1.6–2.7 s of py4j/driver construction cost the
-    # hoist was meant to eliminate, once per operator call.
+    # The bucketing column is built once per operator call, not once
+    # per micro-batch, and only on the fold lane (the arrow lane never
+    # calls bucketed_fold). Each table is the batch path's own
+    # lsh_signature, whose planes are one constant-folded literal
+    # (double_matrix): analyzing it per micro-batch is cheap at any
+    # plane count, and every bucket id equals the batch path's
+    # (pinned by test_incremental_fold_planes_as_data).
     if sig_engine == "fold":
-        _fold_tables = []
-        for t in range(n_tables):
-            bucket = F.lit(0).cast("bigint")
-            for j in range(bits_per_table):
-                bit = t * bits_per_table + j
-                plane = F.element_at("_planes", bit + 1)
-                bucket = bucket + F.when(
-                    dot(F.col("_v"), plane) > 0,
-                    F.lit(2**j).cast("bigint"),
-                ).otherwise(F.lit(0).cast("bigint"))
-            _fold_tables.append(
-                F.struct(F.lit(t).alias("tbl"), bucket.alias("bucket"))
+        fold_tb = F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(t).alias("tbl"),
+                        lsh_signature(
+                            F.col("_v"),
+                            planes[
+                                t * bits_per_table : (t + 1) * bits_per_table
+                            ],
+                        ).alias("bucket"),
+                    )
+                    for t in range(n_tables)
+                ]
             )
-        _fold_tb = F.explode(F.array(*_fold_tables)).alias("_tb")
+        ).alias("_tb")
 
     def bucketed_fold(df: DataFrame) -> DataFrame:
-        pl = df.sparkSession.createDataFrame(
-            [(planes_rows,)], "_planes array<array<double>>"
+        return df.select("_id", "_v", fold_tb).select(
+            "_id", "_v", F.col("_tb.tbl"), F.col("_tb.bucket")
         )
-        return df.crossJoin(F.broadcast(pl)).select(
-            "_id", "_v", _fold_tb
-        ).select("_id", "_v", F.col("_tb.tbl"), F.col("_tb.bucket"))
 
     # plain literals so the closure is self-contained (executors
     # cannot import this repo when the driver runs elsewhere —
